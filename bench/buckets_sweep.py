@@ -1,13 +1,13 @@
 """n_buckets sweep for the fused bucket-aligned collapse (cdc/lww.py
-lww_collapse_bucketed): evidence for the "keep n_buckets well above executor
-slots" guidance in its docstring.
+lww_collapse_bucketed).
 
 Runs the same MoR replay at several n_buckets values on a fixed core count
-and prints one JSON line per setting. Buckets == slots leaves no slack for
-skewed bucket sizes (one straggler bucket idles every other slot during the
-fused write); buckets ≫ slots amortizes stragglers but multiplies small
-files and manifest entries. The sweep shows where the curve bends on this
-workload so the default (32 buckets for 8-32 slots) is a measured choice,
+and prints one JSON line per setting. The collapse exchange has
+min(n_buckets, slots) partitions, so above the slot count more buckets do
+not add tasks: they change how evenly buckets hash onto the tasks (the
+task holding the most bucket bytes sets the write stage's tail) and
+multiply small files and manifest entries. The sweep shows where the curve
+bends on this workload so the table's bucket count is a measured choice,
 not folklore.
 
 Usage: python bench/buckets_sweep.py [--cores 8] [--events 2000000]

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pentaho_kettle_spark.tableio.parquet_snapshot import bucket_expr, bucket_partitions
+
 
 def lww_collapse(
     events: DataFrame,
@@ -141,10 +143,17 @@ def lww_collapse_bucketed(
     write-ready. Measured on the 16M-event bench: ~20% faster end-to-end at
     both 2 and 8 cores than collapse-then-repartition.
 
+    Every exchange here has `bucket_partitions(spark, n_buckets)` =
+    min(n_buckets, task slots) partitions: each bucket lands in exactly one
+    partition, and the SortAggregate's (_bucket, key...) output order is the
+    writer's `_bucket` order, so a batch still writes one file per touched
+    bucket — from one task per slot instead of one per bucket (16 buckets
+    on 4 slots: 4 write tasks, not 16; each task folds ~n_buckets/slots
+    buckets, unevenly — 16 buckets hash 3/3/4/6 onto 4 partitions).
+
     Trade-off vs `lww_collapse`: the exchange moves raw events (no map-side
     partial aggregation), so on very duplicate-heavy logs the two-shuffle
-    form can move fewer bytes. At 10^10 scale keep n_buckets ≫ executor
-    slots so hot buckets interleave with cold ones across the task queue.
+    form can move fewer bytes.
 
     Skew (north_rule): with `n_salts` > 0 the first aggregate groups by
     (_bucket, key, salt) over a (bucket, salt)-hashed exchange — a hot key's
@@ -162,9 +171,8 @@ def lww_collapse_bucketed(
     ordk = F.struct(F.col(lww_col), F.col(seq_col))
     w = F.max_by(F.struct(*[F.col(c) for c in payload]), ordk).alias("w")
 
-    b = events.withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col(bucket_key)), F.lit(n_buckets)).cast("int")
-    )
+    b = events.withColumn("_bucket", bucket_expr(bucket_key, n_buckets))
+    n_parts = bucket_partitions(events.sparkSession, n_buckets)
 
     salt = None
     if n_salts and n_salts > 1:
@@ -183,18 +191,18 @@ def lww_collapse_bucketed(
     if salt is not None:
         p1 = (
             b.withColumn("_salt", salt)
-            .repartition(n_buckets, "_bucket", "_salt")
+            .repartition(n_parts, "_bucket", "_salt")
             .groupBy("_bucket", *key_cols, "_salt")
             .agg(w)
             .select("_bucket", *key_cols, *[F.col(f"w.{c}").alias(c) for c in payload])
         )
         agg = (
-            p1.repartition(n_buckets, "_bucket")
+            p1.repartition(n_parts, "_bucket")
             .groupBy("_bucket", *key_cols)
             .agg(w)
         )
     else:
-        agg = b.repartition(n_buckets, "_bucket").groupBy("_bucket", *key_cols).agg(w)
+        agg = b.repartition(n_parts, "_bucket").groupBy("_bucket", *key_cols).agg(w)
 
     cols = [F.col("_bucket"), *[F.col(k) for k in key_cols]]
     cols += [F.col(f"w.{c}").alias(c) for c in payload if c != seq_col]

@@ -125,11 +125,15 @@ def replay_changelog(
     # exactly-once either way. Depth 4 by default ($PKS_REPLAY_PIPELINE;
     # interleaved A/B r6: depth 4 = 2.4-2.7s vs depth 2 = 2.9-3.7s on the
     # 2M-event replay — the batch jobs don't saturate the cores, so deeper
-    # overlap fills the gaps; a latency-sensitive deployment can set 1-2 to
-    # bound in-flight memory and commit-lag variance). CoW batches stay
-    # sequential — two concurrent CoW merges over the same buckets would
-    # just livelock the conflict-retry loop — as do crash-simulation runs
-    # (stop_after_batch).
+    # overlap fills the gaps). Re-measured once the bucket exchange ran one
+    # task per slot (layerbench mor_replay_zipf, 4 cores, 3 interleaved
+    # seed pairs): depth 4 = 48.6-49.6k events/s vs depth 2 = 41.5-49.0k
+    # (the 41.5k run had 19% steal), while depth 2 cuts batch latency ~40%
+    # (p50 0.88-1.06s vs 1.56-1.64s) at 3-10% less CPU per batch. So a
+    # latency-sensitive deployment can set 1-2 to bound in-flight memory,
+    # commit lag and batch latency. CoW batches stay sequential — two
+    # concurrent CoW merges over the same buckets would just livelock the
+    # conflict-retry loop — as do crash-simulation runs (stop_after_batch).
     import os as _os
 
     depth = int(_os.environ.get("PKS_REPLAY_PIPELINE", "4"))

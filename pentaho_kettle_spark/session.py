@@ -62,8 +62,8 @@ def get_spark(
         # With this at its default (true) Spark refuses subset-key
         # co-partitioning and re-shuffles BOTH sides by the full key set —
         # exactly the exchange the fused plan exists to remove. Subset
-        # clustering is deliberate here: n_buckets is the table's layout
-        # parallelism, at cluster scale it is sized ≫ executor slots.
+        # clustering is deliberate here: both sides are staged into the same
+        # min(n_buckets, slots) partitions (tableio bucket_partitions).
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
     )
     # shuffle/spill dir on tmpfs when available: the sandbox's virtio disk

@@ -210,15 +210,20 @@ class CompactionScheduler:
                 return
 
     def stop(self, final_cycle: bool = True) -> None:
-        """Stop the loop; optionally run one last fold so the table ends
-        fully compacted (what a drain-and-shutdown deployment wants)."""
+        """Stop the loop; optionally fold every bucket that still carries
+        delta files, so the table ends fully compacted (what a
+        drain-and-shutdown deployment wants). The drain ignores the policy:
+        a policy cycle leaves up to its threshold of deltas per bucket, and
+        how many that is depends on where the last timed cycle fell in the
+        ingest, so every later read would pay a collapse whose size depends
+        on ingest speed."""
         self._stop.set()
         if self._thread is not None:
             self._thread.join(timeout=600)
         if self._error is not None:
             raise RuntimeError("compaction scheduler failed") from self._error
         if final_cycle:
-            done = run_compaction_cycle(self.table, self.policy)
+            done = self.table.compact()
             if done:
                 self.compacted.append(done)
 

@@ -147,6 +147,17 @@ def bucket_expr(key_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
 
 
+def bucket_partitions(spark: SparkSession, n_buckets: int) -> int:
+    """Partition count of every exchange hash-partitioned on `_bucket`: one
+    task per slot, not one per bucket. Each bucket still lands in exactly
+    one partition, so a write still makes one file per touched bucket,
+    while a small batch stops paying the fixed per-task cost (write-job
+    Hadoop conf deserialisation, codegen, task deserialisation) n_buckets
+    times. Both sides of the bucket-aligned CoW join use it, which keeps
+    them co-partitioned."""
+    return min(n_buckets, spark.sparkContext.defaultParallelism)
+
+
 def _conform_cols(batch_cols, schema_fields, key_cols, lww_col) -> list:
     """Align a merge batch to the table schema. A column the batch lacks is
     legal ONLY when it is neither a key nor the LWW stamp: it means the
@@ -497,8 +508,19 @@ class ParquetSnapshotTableIO:
             manifest[f"{key}_segments"] = segs
             manifest[key] = full_list[n_full * SEGMENT_ROWS:]
         name = f"snap-{manifest['snapshot_id']:06d}.json"
-        with open(os.path.join(self.root, "snapshots", name), "w") as f:
-            json.dump(manifest, f, indent=1)
+        # tmp + rename like the pointer below: a write that fails midway
+        # must not leave a torn snap-N.json that snapshot_ids() would list
+        # and the next commit's id allocation would count
+        snap = os.path.join(self.root, "snapshots", name)
+        tmp = snap + f".tmp-{uuid.uuid4().hex}"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(manifest, f, indent=1)
+            os.rename(tmp, snap)
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
         tmp = self._current_path() + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             f.write(name)
@@ -733,13 +755,12 @@ class ParquetSnapshotTableIO:
             # fused single-exchange plan) — re-staging would add a shuffle
             staged = df
         else:
-            # pin the exchange to n_buckets partitions (not shuffle.partitions
-            # + AQE coalesce): the write stage's layout is FIXED — one task
-            # per bucket hash slot, one file per bucket per batch — so runtime
-            # re-planning only removes write parallelism here
+            # an explicit partition count (no AQE coalesce): each task writes
+            # one file for each of the buckets hashed to it, so a batch
+            # makes one file per touched bucket from one task per slot
             staged = df.withColumn(
                 "_bucket", bucket_expr(self.key_cols[0], self.n_buckets)
-            ).repartition(self.n_buckets, "_bucket")
+            ).repartition(bucket_partitions(self.spark, self.n_buckets), "_bucket")
         if self.sort_on_write:
             # per-partition sort only — preserves the bucket partitioning,
             # adds no exchange. "_bucket" leads the order: partitionBy
@@ -1193,14 +1214,15 @@ class ParquetSnapshotTableIO:
             if fused:
                 # bucket-aligned merge (r6): `chg` arrives hash-partitioned
                 # by `_bucket` from the fused collapse; staging the table
-                # side by the SAME bucket expression makes the full-outer
-                # join co-partitioned — the batch is never re-shuffled by
+                # side by the SAME bucket expression into the SAME
+                # bucket_partitions count makes the full-outer join
+                # co-partitioned — the batch is never re-shuffled by
                 # key, and the merged output is already laid out for the
                 # bucket write (one exchange of table bytes instead of a
                 # key-shuffle of both sides plus a staging exchange).
                 current = current.withColumn(
                     "_bucket", bucket_expr(key[0], self.n_buckets)
-                ).repartition(self.n_buckets, "_bucket")
+                ).repartition(bucket_partitions(self.spark, self.n_buckets), "_bucket")
 
             c = chg.alias("c")
             t = current.alias("t")

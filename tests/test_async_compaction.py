@@ -107,15 +107,41 @@ def test_scheduler_races_live_ingest(spark, tmp_path):
     ).start()
     try:
         replay_changelog(spark, table, log, n_batches=12, run_id="race")
+        # folds made while batches committed; the drain in stop() folds too
+        raced = list(sched.compacted)
     finally:
         sched.stop(final_cycle=True)
 
-    assert sched.compacted, "scheduler never compacted — race not exercised"
+    assert raced, "scheduler never compacted — race not exercised"
     rows = _assert_matches_oracle(table, pdf)
     assert rows > 0
     # fully folded after the drain cycle
     m = table.current_manifest()
     assert not any(e["kind"] == "delta" for es in m["files"].values() for e in es)
+
+
+def test_stop_drains_every_delta_whatever_the_policy(spark, tmp_path):
+    """stop(final_cycle=True) leaves the table fully compacted even when the
+    policy finds no bucket due: the drained state must not depend on where
+    the last timed cycle fell in the ingest."""
+    pdf = gen_changelog(3000, 120, seed=21)
+    table = ParquetSnapshotTableIO(
+        spark, str(tmp_path / "t"), n_buckets=4, write_mode="mor",
+        compact_delta_files=None,
+    )
+    table.init_empty(DATA_SCHEMA)
+    log = spark.createDataFrame(pdf, schema=CHANGELOG_SCHEMA)
+    # a threshold no bucket reaches and an interval no cycle fits into
+    sched = CompactionScheduler(
+        table, CompactionPolicy(max_delta_files=100), interval_sec=3600
+    ).start()
+    replay_changelog(spark, table, log, n_batches=3, run_id="drain")
+    sched.stop(final_cycle=True)
+
+    files = table.current_manifest()["files"]
+    assert sched.compacted == [sorted(int(b) for b in files)]
+    assert all([e["kind"] for e in es] == ["base"] for es in files.values())
+    _assert_matches_oracle(table, pdf)
 
 
 def test_scheduler_error_surfaces_on_stop(spark, tmp_path):

@@ -366,6 +366,46 @@ def test_meta_tables(spark, tmp_path):
     assert _json.loads(lin[0].detail)["batch_id"] == "b1"
 
 
+def test_torn_snapshot_write_leaves_no_trace(spark, tmp_path, monkeypatch):
+    """A snapshot write that fails midway (disk full, crash) must leave the
+    table as if the commit was never tried: no torn snap-N.json listed by
+    snapshot_ids() or read by meta_snapshots(), and the next commit takes
+    the id the failed one would have had."""
+    import json as _json
+
+    from pentaho_kettle_spark.tableio import parquet_snapshot as ps
+
+    t = _mk(spark, str(tmp_path / "torn"), write_mode="mor")
+    t.merge_apply(_changes(spark, [("a", 1.0, 100, 1, "U")]), batch_id="b1")
+    ids = t.snapshot_ids()
+    real_dump = _json.dump
+
+    def torn_dump(obj, f, **kw):
+        if os.sep + "snapshots" + os.sep not in f.name:
+            return real_dump(obj, f, **kw)
+        f.write('{"snapshot_id": ')
+        raise OSError("no space left on device")
+
+    monkeypatch.setattr(ps.json, "dump", torn_dump)
+    try:
+        t.evolve_schema([{"action": "add", "name": "x", "type": "string"}])
+        raise AssertionError("the injected write failure did not surface")
+    except OSError:
+        pass
+    monkeypatch.undo()
+
+    assert t.snapshot_ids() == ids
+    assert sorted(r.snapshot_id for r in t.meta_snapshots().collect()) == ids
+    # no tmp file left behind either
+    assert sorted(os.listdir(tmp_path / "torn" / "snapshots")) == [
+        f"snap-{i:06d}.json" for i in ids
+    ]
+    assert {r.k: r.v for r in t.read().collect()} == {"a": 1.0}
+    t.evolve_schema([{"action": "add", "name": "x", "type": "string"}])
+    assert t.snapshot_id() == ids[-1] + 1
+    assert "x" in t.read().columns
+
+
 # --- bucket-layout evolution ----------------------------------------------
 
 

@@ -70,8 +70,9 @@ def test_minhash_codegen_signatures_match_hof_shingles(spark):
     """The exploded-index signature path (Generate + codegen projection)
     must be bit-identical to aggregating over `_shingles`'s HOF array —
     including the duplicate-shingle difference (min is insensitive), the
-    short-doc branch (n < k hashes the whole text), and empty text. Pinned
-    for BOTH hash functions (xxhash64 scale path, phash64 oracle twin)."""
+    short-doc branch (n < k hashes the whole text), empty text and a null
+    doc. Pinned for BOTH hash functions (xxhash64 scale path, phash64 oracle
+    twin)."""
     import pandas as pd
 
     from pentaho_kettle_spark.functions import dedup as D
@@ -84,6 +85,7 @@ def test_minhash_codegen_signatures_match_hof_shingles(spark):
         (4, "short doc"),  # n < k
         (5, ""),  # empty after normalize
         (6, "  Mixed   CASE   and    runs	of whitespace normalize down  "),
+        (7, None),  # null doc
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for hash_fn in (F.xxhash64, phash64):
